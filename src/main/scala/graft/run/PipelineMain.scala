@@ -1,6 +1,7 @@
 package graft.run
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import graft.GraftSession
 import graft.ingest.UsgsGeoJson
 import graft.jobs.{BronzeToSilver, SilverToGold, TrainTsunamiModel}
@@ -16,16 +17,18 @@ object PipelineMain {
 
   /** Bounded per-task retry (the orchestrator semantics of the reference's
     * `retries=5`): a stage body that throws is re-run up to `retries` more
-    * times; the final failure propagates. Stages are idempotent (overwrite
-    * sinks), so a re-run after partial progress is safe — the same property
-    * the reference relies on for its Airflow retries. */
+    * times; the final failure propagates. Only non-fatal errors are
+    * retried: an interrupt or a `VirtualMachineError` propagates on the
+    * first attempt, since re-running cannot cure it. Stages are idempotent
+    * (overwrite sinks), so a re-run after partial progress is safe — the
+    * same property the reference relies on for its Airflow retries. */
   def withRetries[T](taskId: String, retries: Int = 5)(body: => T): T = {
     var attempt = 0
     var out: Option[T] = None
     while (out.isEmpty) {
       try out = Some(body)
       catch {
-        case e: Throwable if attempt < retries =>
+        case NonFatal(e) if attempt < retries =>
           attempt += 1
           System.err.println(
             s"[pipeline] task $taskId attempt $attempt/$retries failed: " +

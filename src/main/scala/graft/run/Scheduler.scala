@@ -2,6 +2,7 @@ package graft.run
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
+import scala.util.control.NonFatal
 
 /** Orchestrator scheduling semantics for the reference DAG
   * (dags/earthquake_etl_dag.py:80-131): `@daily` schedule with catchup,
@@ -43,22 +44,26 @@ object Scheduler {
 
   /** One scheduler tick: run every pending logical date through `runFor`,
     * marking success only for runs that return normally. Failed dates are
-    * reported and stay pending for the next tick. */
+    * reported and stay pending for the next tick. A fatal error (an
+    * interrupt, a `VirtualMachineError`) aborts the sweep instead; the
+    * dates that completed before it keep their markers. */
   def sweep(ledgerDir: String, start: LocalDate, today: LocalDate,
             catchup: Boolean = true)(runFor: LocalDate => Unit): SweepResult = {
     val pending = pendingDates(start, today, isDone(ledgerDir, _), catchup)
     val (ok, bad) = pending.partition { d =>
-      try { runFor(d); true }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[scheduler] run $d failed: ${e.getMessage}")
-          false
+      val ran =
+        try { runFor(d); true }
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[scheduler] run $d failed: ${e.getMessage}")
+            false
+        }
+      if (ran) {
+        val m = marker(ledgerDir, d)
+        Files.createDirectories(m.getParent)
+        Files.writeString(m, "")
       }
-    }
-    ok.foreach { d =>
-      val m = marker(ledgerDir, d)
-      Files.createDirectories(m.getParent)
-      Files.writeString(m, "")
+      ran
     }
     SweepResult(ok, bad)
   }

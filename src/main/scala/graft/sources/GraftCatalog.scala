@@ -25,6 +25,6 @@ object GraftCatalog {
                    tables: Seq[String] = Seq("dim_date", "dim_location",
                      "dim_magnitude", "dim_event_type", "fact_earthquake_events")): Unit =
     tables.foreach { t =>
-      spark.read.parquet(s"$goldDir/$t").createOrReplaceTempView(t)
+      ParquetRead(spark, Seq(s"$goldDir/$t")).createOrReplaceTempView(t)
     }
 }

@@ -12,6 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Swapping in Delta/BigQuery on a real cluster is a one-line format
   * change behind these traits; job code does not change.
+  *
+  * Read path: every parquet read here goes through [[ParquetRead]] — the
+  * table's schema comes from one footer, read on the driver (the file and
+  * conversion Spark's non-merge inference uses), so a table read plans
+  * without submitting a Spark job.
   */
 trait LakeFormat {
   def write(df: DataFrame, path: String, partitionBy: Seq[String]): Unit
@@ -32,7 +37,7 @@ object ParquetLake extends LakeFormat {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession, path: String): DataFrame = ParquetRead(spark, Seq(path))
 }
 
 /** Local warehouse: one parquet directory per table under a root.
@@ -61,7 +66,7 @@ final class ParquetWarehouse(root: String) extends WarehouseSink {
     fs.delete(aside, true)
   }
   def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"$root/$table")
+    ParquetRead(spark, Seq(s"$root/$table"))
 }
 
 /** Lake maintenance: small-file compaction (the `OPTIMIZE` analog).
@@ -82,7 +87,7 @@ object Compaction {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (dataFiles.length <= nOut) return dataFiles.length // nothing to gain
     val scratch = s"${dir}_compact_tmp"
-    spark.read.parquet(dir).repartition(nOut)
+    ParquetRead(spark, Seq(dir)).repartition(nOut)
       .write.mode("overwrite").parquet(scratch)
     val aside = new org.apache.hadoop.fs.Path(s"${dir}_compact_old")
     fs.delete(aside, true)

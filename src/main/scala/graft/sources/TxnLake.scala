@@ -717,10 +717,8 @@ object TxnLake extends LakeFormat {
     lastPruneDistributed = true
     val df =
       if (kept.isEmpty)
-        toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(sampleAbs)
-          case None => spark.read.parquet(sampleAbs)
-        }, ren).where(lit(false))
+        toDisplay(ParquetRead(spark, Seq(sampleAbs), schema), ren)
+          .where(lit(false))
       else scanFiles(spark, table, kept, schema,
           resolveDvs(spark, table, v), ren)
         .where(predicate)
@@ -1250,10 +1248,7 @@ object TxnLake extends LakeFormat {
         val ren = entry.renames
         // the sidecars and stats are keyed by the column's PHYSICAL name
         val colPhys = physicalOf(spark, ren, column)
-        def scan(paths: Seq[String]) = toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }, ren)
+        def scan(paths: Seq[String]) = toDisplay(ParquetRead(spark, paths, schema), ren)
         val kept =
           if (keys.isEmpty) Seq.empty
           else files.filter(
@@ -1405,10 +1400,7 @@ object TxnLake extends LakeFormat {
         val df =
           if (kept.isEmpty) {
             val head = Seq(new Path(table, files.head.path).toString)
-            toDisplay(schema match {
-              case Some(st) => spark.read.schema(st).parquet(head: _*)
-              case None => spark.read.parquet(head: _*)
-            }, ren).where(lit(false))
+            toDisplay(ParquetRead(spark, head, schema), ren).where(lit(false))
           } else scanFiles(spark, table, kept, schema,
             resolveDvs(spark, table, v), ren)
         (df, (kept.size, files.size))
@@ -2209,10 +2201,7 @@ object TxnLake extends LakeFormat {
                         dvs: Map[String, DvRef],
                         ren: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.col
-    def scan(paths: Seq[String]) = schema match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    def scan(paths: Seq[String]) = ParquetRead(spark, paths, schema)
     def abs(fms: Seq[FileMeta]) =
       fms.map(fm => new Path(table, fm.path).toString)
     val (masked, clean) = files.partition(fm => dvs.contains(fm.path))
@@ -2408,10 +2397,7 @@ object TxnLake extends LakeFormat {
         val entry = readEntry(spark, table, v)
         val schema = entry.schemaStruct
         val ren = entry.renames
-        def scan(paths: Seq[String]) = toDisplay(schema match {
-          case Some(st) => spark.read.schema(st).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }, ren)
+        def scan(paths: Seq[String]) = toDisplay(ParquetRead(spark, paths, schema), ren)
         // the predicate references DISPLAY names; the matcher sees the
         // stats through the same display overlay (displayMeta)
         val pred = resolvedPredicate(spark, abs(files).head, predicate,
@@ -2452,8 +2438,7 @@ object TxnLake extends LakeFormat {
   private def resolvedPredicate(spark: SparkSession, sampleFile: String,
                                 predicate: Column,
                                 schema: Option[StructType] = None): Expression = {
-    val reader = schema.map(spark.read.schema).getOrElse(spark.read)
-    val probe = reader.parquet(sampleFile).where(predicate)
+    val probe = ParquetRead(spark, Seq(sampleFile), schema).where(predicate)
     probe.queryExecution.analyzed.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.headOption.getOrElse(Literal(true, BooleanType))
@@ -3683,7 +3668,8 @@ object TxnLake extends LakeFormat {
     * column that exists only in carried-over files: every later
     * logged-schema read would then hide that column's data (column-level
     * loss). One extra footer sweep, paid only on the one legacy-upgrade
-    * commit. */
+    * commit — deliberately Spark's own merging read, not [[ParquetRead]],
+    * which reproduces only the single-footer inference. */
   private def subsetReadSchema(spark: SparkSession, table: String,
                                logged: Option[StructType],
                                snapshot: => Seq[FileMeta]): StructType =

@@ -30,4 +30,23 @@ class PipelineRetrySpec extends AnyFunSuite {
     assert(e.getMessage == "permanent")
     assert(calls == 4) // 1 initial + 3 retries
   }
+
+  test("a fatal error propagates on the first attempt, never retried") {
+    var calls = 0
+    intercept[InterruptedException] {
+      PipelineMain.withRetries("stage", retries = 5) {
+        calls += 1
+        throw new InterruptedException("stop")
+      }
+    }
+    assert(calls == 1)
+    calls = 0
+    intercept[StackOverflowError] {
+      PipelineMain.withRetries("stage", retries = 5) {
+        calls += 1
+        throw new StackOverflowError("vm")
+      }
+    }
+    assert(calls == 1)
+  }
 }

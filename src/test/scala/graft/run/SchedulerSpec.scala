@@ -59,4 +59,21 @@ class SchedulerSpec extends AnyFunSuite {
     }
     assert(r.ran == Seq(d("2024-01-01")) && attempts == 3)
   }
+
+  test("a fatal error aborts the sweep; dates done before it stay marked") {
+    val ledger = java.nio.file.Files.createTempDirectory("sched_fatal").toString
+    val runs = scala.collection.mutable.ArrayBuffer.empty[LocalDate]
+    intercept[InterruptedException] {
+      Scheduler.sweep(ledger, d("2024-01-01"), d("2024-01-04")) { date =>
+        runs += date
+        if (date == d("2024-01-02")) throw new InterruptedException("stop")
+      }
+    }
+    // the interrupt is not swallowed as a failed date: later dates never run
+    assert(runs == Seq(d("2024-01-01"), d("2024-01-02")))
+    assert(Scheduler.isDone(ledger, d("2024-01-01")))
+    assert(!Scheduler.isDone(ledger, d("2024-01-02")))
+    val r = Scheduler.sweep(ledger, d("2024-01-01"), d("2024-01-04"))(_ => ())
+    assert(r.ran == Seq(d("2024-01-02"), d("2024-01-03")) && r.failed.isEmpty)
+  }
 }
