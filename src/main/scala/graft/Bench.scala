@@ -1,9 +1,8 @@
 package graft
+import scala.util.control.NonFatal
+import graft.obs.Measure
 import org.apache.spark.sql.SparkSession
 object Bench {
-  private def dropAllStorage(spark: SparkSession): Unit =
-    SessionHygiene.dropAllStorage(spark)
-
   /** Stop a recycled session with the root logger OFF: teardown races
     * (in-flight RPC against the closing NettyRpcEnv, lingering streaming
     * threads) log multi-KB ERROR traces, and the driver captures only the
@@ -51,9 +50,32 @@ object Bench {
       // didn't fully hide (d01 0.10 -> 0.22 s across r4/r5 protocols).
       SparkEntry.queries("d01_doc_token_stats")(spark, sfDir).count()
       SessionHygiene.dropAllStorage(spark)
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) => System.err.println(s"[bench] session warm-up failed: $e")
+    }
 
-  def main(args: Array[String]): Unit = {
+  /** Steady-state seconds of one registry query (warm, then best of two),
+    * or None when it throws: a failed query is reported in "failed",
+    * never timed as a pass. */
+  private def timed(spark: SparkSession, sfDir: String,
+                    name: String): Option[Double] =
+    try {
+      val fn = SparkEntry.queries(name)
+      Some(Measure.steady(spark)(fn(spark, sfDir).count()).seconds)
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        SessionHygiene.dropAllStorage(spark)
+        None
+    }
+
+  /** Exits with status 1 after the metric line when any query failed. */
+  def main(args: Array[String]): Unit =
+    if (run(args).nonEmpty) sys.exit(1)
+
+  /** Bench the registry (or the named queries) and print the metric
+    * line; returns the names of the queries that failed. */
+  private def run(args: Array[String]): Seq[String] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Steady-state measurement: each query runs twice AT THE TARGET SF and
     // the second run is reported. The first run pays one-time costs that a
@@ -76,7 +98,7 @@ object Bench {
     // that interference; restart cost sits OUTSIDE the timed sections, and
     // every query still measures steady-state (warm + best-of-two) inside
     // a healthy driver.
-    val group = sys.env.getOrElse("GRAFT_BENCH_GROUP", "4").toInt
+    val group = 4
     // Optional args: query names (dev-only isolation harness; the driver
     // always benches the full registry).
     val only: Option[Set[String]] =
@@ -120,7 +142,8 @@ object Bench {
           }
         }
       } catch { case _: Exception => Map.empty }
-    val results = chunks.iterator.flatMap { chunk =>
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val chunkResults = chunks.iterator.flatMap { chunk =>
       val spark = GraftSession.local()
       quietLineageWarns()
       // stop() in finally: a wedged chunk must not leak its SparkContext —
@@ -135,20 +158,10 @@ object Bench {
           contractChecked = true
         }
         warmSession(spark, sfDir)
-        chunk.map { name =>
-          val fn = SparkEntry.queries(name)
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-            (System.nanoTime() - t0) / 1e9
-          }
-          once() // warm: plan + codegen + JIT for this exact query at this SF
-          dropAllStorage(spark)
-          val r1 = once() // steady state, cold caches
-          dropAllStorage(spark)
-          val r2 = once() // best-of-two damps GC/scheduler noise on the tail
-          dropAllStorage(spark)
-          name -> math.min(r1, r2)
+        chunk.flatMap { name =>
+          val t = timed(spark, sfDir, name)
+          if (t.isEmpty) failed += name
+          t.map(name -> _)
         }
       } finally quietStop(spark)
     }.toMap
@@ -171,13 +184,6 @@ object Bench {
       else s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
     }
     def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val keys = results.keys.map(shortKey)
-    val keyFn: String => String =
-      if (keys.toSet.size == results.size) shortKey else identity
-    def qsJson(rs: Iterable[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + keyFn(k) + "\":" + s2t(v) }
-        .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
     // SELF-ADJUDICATION (r17 verdict item 4): a query drifting past 2x
     // AND +1s absolute vs the previous round's sidecar re-measures ALONE
     // in a fresh session — warm + best-of-two, the exact protocol — and
@@ -191,30 +197,39 @@ object Bench {
     // names when short keys collide (keyFn = identity) — read it back
     // through the same fallback, or a collision round would silently
     // disable drift re-measurement (every shortKey lookup missing)
-    val drifters = results.toSeq
+    val drifters = chunkResults.toSeq
       .filter { case (n, v) =>
         prev.get(shortKey(n)).orElse(prev.get(n))
           .exists(p => v > 2 * p && v > p + 1.0) }
       .sortBy(-_._2).take(6).map(_._1)
     val remeasured: Map[String, Double] =
       if (only.isDefined || drifters.isEmpty) Map.empty
-      else drifters.map { name =>
+      else drifters.flatMap { name =>
         val spark = GraftSession.local()
         quietLineageWarns()
         try {
           warmSession(spark, sfDir)
-          val fn = SparkEntry.queries(name)
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-            (System.nanoTime() - t0) / 1e9
-          }
-          once(); dropAllStorage(spark)
-          val r1 = once(); dropAllStorage(spark)
-          val r2 = once(); dropAllStorage(spark)
-          name -> math.min(r1, r2)
+          val t = timed(spark, sfDir, name)
+          if (t.isEmpty) failed += name
+          t.map(name -> _)
         } finally quietStop(spark)
       }.toMap
+    // a query that failed on re-measure is a failure, not a pass
+    val results = chunkResults -- failed
+    val allNames = results.keys ++ failed
+    val keyFn: String => String =
+      if (allNames.map(shortKey).toSet.size == allNames.size) shortKey
+      else identity
+    def qsJson(rs: Iterable[(String, Double)]): String =
+      rs.map { case (k, v) => "\"" + keyFn(k) + "\":" + s2t(v) }
+        .mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.values.sum else 0.0
+    // failed: every query that threw, emitted only when non-empty; the
+    // run then exits with status 1
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.sorted.map(n => "\"" + keyFn(n) + "\"")
+        .mkString(""","failed":[""", ",", "]")
     // contracts: testdata schema-drift count from the startup probe —
     // makes a mid-round regeneration visible in the artifact the judge
     // reads, not just on stderr. Emitted ONLY when nonzero since round 15:
@@ -244,7 +259,7 @@ object Bench {
     def line(qs: String, extra: String = ""): String = {
       val contracts =
         if (contractWarnings > 0) s""","contracts":$contractWarnings""" else ""
-      s"""{"metric":"total","value":${s2(total)},"unit":"sec"$extra$contracts,"threads":$threadsActual,"cache_mb":$cacheMb,"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
+      s"""{"metric":"total","value":${s2(total)},"unit":"sec"$extra$contracts$failedJson,"threads":$threadsActual,"cache_mb":$cacheMb,"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
     }
     // SIDECAR: the complete, never-truncated metric JSON lands in a FILE
     // (r13 lost 8 per-query entries to the stdout tail window); the
@@ -264,7 +279,7 @@ object Bench {
     var tmp: java.nio.file.Path = null
     if (only.isDefined) {
       println(line(qsJson(results)))
-      return
+      return failed.toSeq
     }
     try {
       tmp = java.nio.file.Files.createTempFile(
@@ -313,5 +328,6 @@ object Bench {
         cand
       }
     println(out)
+    failed.toSeq
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.Measure
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,11 +25,11 @@ import org.apache.spark.sql.functions._
   * dimensions — 10x edges into the same aggregate graph, the realistic
   * fact-growth shape for x18.
   *
-  * Each (factor, query) measurement follows the Bench protocol (warm run,
-  * then best-of-two with storage drops) and captures task-metric totals —
-  * shuffle read/write bytes, mem+disk spill, max per-task peak execution
-  * memory — via a listener. Results print as one JSON line per factor;
-  * SCALE.md records the adjudicated table.
+  * Each (factor, query) measurement follows the Bench protocol
+  * ([[graft.obs.Measure.steady]]: warm run, then best-of-two with storage
+  * drops) and reports its task-metric totals — shuffle read/write bytes,
+  * mem+disk spill, max per-task peak execution memory. Results print as
+  * one JSON line per factor; SCALE.md records the adjudicated table.
   *
   * Usage: runMain graft.ScaleStress <baseSfDir>
   * <factors csv|skew|bigdoc|vecprune|ndprune|ndpruneac|dcprune|dcpruneac
@@ -38,24 +37,9 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
 
-  private final class MetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spill = new AtomicLong
-    val peakMem = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-      }
-    }
-    def reset(): Unit = {
-      shuffleRead.set(0); shuffleWrite.set(0); spill.set(0); peakMem.set(0)
-    }
-  }
+  private def s2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+  private val mb = 1024.0 * 1024.0
 
   /** Tables the stressed queries read. Everything else is omitted — the
     * scaled dirs are query inputs, not full testdata generations. */
@@ -249,42 +233,17 @@ object ScaleStress {
     "d48_suffix_lrs", "d51_exact_substring_dedup",
     "d53_bench_decontaminate")
 
-  private def measure(spark: SparkSession, listener: MetricsListener,
-                      dir: String, queries: Seq[String], tag: String): Unit = {
-    val perQ = queries.map { name =>
+  private def measure(spark: SparkSession, dir: String, queries: Seq[String],
+                      tag: String): Unit = {
+    val qs = queries.map { name =>
       val fn = SparkEntry.queries(name)
-      // Each timed run resets the listener before and snapshots after a
-      // bus drain, so the reported task metrics always belong to the run
-      // whose wall time is reported (an earlier draft only reset before
-      // run b, pairing run a's time with run b's metrics when a won).
-      def once(): (Double, Long, (Long, Long, Long, Long)) = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        val n = fn(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        SessionHygiene.dropAllStorage(spark)
-        // deterministic listener-bus drain: waitUntilEmpty is the barrier
-        // the async delivery actually honors — a fixed sleep raced on a
-        // loaded machine and attributed late task-end events to the next
-        // run's snapshot
-        org.apache.spark.GraftListenerShim
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-        (sec, n, (listener.shuffleRead.get, listener.shuffleWrite.get,
-          listener.spill.get, listener.peakMem.get))
-      }
-      once() // warm: codegen + JIT for this plan at this input
-      val a = once()
-      val b = once()
-      val (sec, rows, m) = if (a._1 <= b._1) a else b
-      val mb = 1024.0 * 1024.0
-      (name.takeWhile(_ != '_'), sec, rows,
-        m._1 / mb, m._2 / mb, m._3 / mb, m._4 / mb)
-    }
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val qs = perQ.map { case (k, sec, rows, sr, sw, sp, pk) =>
-      s""""$k":{"sec":${s2(sec)},"rows":$rows,"shuf_read_mb":${s2(sr)},""" +
-        s""""shuf_write_mb":${s2(sw)},"spill_mb":${s2(sp)},"peak_task_mb":${s2(pk)}}"""
+      val r = Measure.steady(spark)(fn(spark, dir).count())
+      val m = r.totals
+      s""""${name.takeWhile(_ != '_')}":{"sec":${s2(r.seconds)},""" +
+        s""""rows":${r.value},"shuf_read_mb":${s2(m.shuffleReadBytes / mb)},""" +
+        s""""shuf_write_mb":${s2(m.shuffleWriteBytes / mb)},""" +
+        s""""spill_mb":${s2(m.spillBytes / mb)},""" +
+        s""""peak_task_mb":${s2(m.peakExecutionMemory / mb)}}"""
     }.mkString("{", ",", "}")
     // self-describing: a run at the wrong thread count must be visible in
     // the evidence line itself (a silent local[4] fallback once produced
@@ -301,8 +260,8 @@ object ScaleStress {
     * files total at factor 10 (pre-x39-pruning the probe scanned every
     * file every batch). The batch itself is one curateVecBatch call —
     * the exact code path the x39 sink runs. */
-  private def measureVecPrune(spark: SparkSession, listener: MetricsListener,
-                              dir: String, tag: String): Unit = {
+  private def measureVecPrune(spark: SparkSession, dir: String,
+                              tag: String): Unit = {
     import graft.sources.TxnLake
     import graft.streaming.VectorStream
     val table = s"$dir/vecprune_t"
@@ -324,29 +283,16 @@ object ScaleStress {
     }
     val lbl = emb.agg(min("label")).head().getInt(0)
     val delta = emb.filter(col("vec_id") % 3 === 0 && col("label") === lbl)
-    def once(): (Double, Long, (Long, Long, Long, Long)) = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val n = VectorStream.curateVecBatch(delta, table, 8L).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      SessionHygiene.dropAllStorage(spark)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      (sec, n, (listener.shuffleRead.get, listener.shuffleWrite.get,
-        listener.spill.get, listener.peakMem.get))
-    }
-    once() // warm
-    val a = once(); val b = once()
-    val (sec, rows, mtr) = if (a._1 <= b._1) a else b
+    val r = Measure.steady(spark)(
+      VectorStream.curateVecBatch(delta, table, 8L).count())
+    val m = r.totals
     val (kept, total) = VectorStream.lastProbeSkipping
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val mb = 1024.0 * 1024.0
     println(s"""SCALE {$tag,"mode":"vecprune","cpus":${spark.sparkContext
-      .defaultParallelism},"probe_sec":${s2(sec)},"rows":$rows,""" +
+      .defaultParallelism},"probe_sec":${s2(r.seconds)},"rows":${r.value},""" +
       s""""files_kept":$kept,"files_total":$total,""" +
-      s""""shuf_read_mb":${s2(mtr._1 / mb)},"spill_mb":${s2(mtr._3 / mb)},""" +
-      s""""peak_task_mb":${s2(mtr._4 / mb)}}""")
+      s""""shuf_read_mb":${s2(m.shuffleReadBytes / mb)},""" +
+      s""""spill_mb":${s2(m.spillBytes / mb)},""" +
+      s""""peak_task_mb":${s2(m.peakExecutionMemory / mb)}}""")
   }
 
   /** x46 probe-pruning evidence (mode "ndprune") — the text-tier analog
@@ -363,8 +309,8 @@ object ScaleStress {
     * min/max stats on hash-uniform columns could never prune. The probe
     * is one [[graft.streaming.CurationStream.curateBatchNearDup]] call —
     * the exact code path the x33/x40/x46 sink runs. */
-  private def measureNdPrune(spark: SparkSession, listener: MetricsListener,
-                             dir: String, tag: String): Unit = {
+  private def measureNdPrune(spark: SparkSession, dir: String,
+                             tag: String): Unit = {
     import graft.sources.TxnLake
     import graft.streaming.CurationStream
     import graft.functions.TextFunctions.{fingerprint, tokens}
@@ -422,38 +368,24 @@ object ScaleStress {
     val delta = docs
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 100000L)
       .orderBy("doc_id").limit(5).unionByName(nearDup)
-    var nearDupDropped = false
-    def once(): (Double, Long, (Long, Long, Long, Long)) = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val ids = CurationStream.curateBatchNearDup(delta, table, 8L, appId)
-        .select("doc_id").collect().map(_.getLong(0))
-      val sec = (System.nanoTime() - t0) / 1e9
-      nearDupDropped = !ids.contains(900001L)
-      SessionHygiene.dropAllStorage(spark)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      (sec, ids.length.toLong, (listener.shuffleRead.get,
-        listener.shuffleWrite.get, listener.spill.get, listener.peakMem.get))
-    }
-    once() // warm
-    val a = once(); val b = once()
-    val (sec, rows, mtr) = if (a._1 <= b._1) a else b
+    val r = Measure.steady(spark)(
+      CurationStream.curateBatchNearDup(delta, table, 8L, appId)
+        .select("doc_id").collect().map(_.getLong(0)))
+    val m = r.totals
     val (bKept, bTotal) = CurationStream.lastBandIndexSkipping
     val (fKept, fTotal) = CurationStream.lastFpSkipping
     val path = CurationStream.probePaths.getOrElse((table, 8L), "?")
     val sf = graft.operators.MinHashDedup.lastProbeCandShuffleFree
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val mb = 1024.0 * 1024.0
     println(s"""SCALE {$tag,"mode":"ndprune","cpus":${spark.sparkContext
-      .defaultParallelism},"probe_sec":${s2(sec)},"rows":$rows,""" +
+      .defaultParallelism},"probe_sec":${s2(r.seconds)},""" +
+      s""""rows":${r.value.length},""" +
       s""""path":"$path","cand_shuffle_free":$sf,""" +
-      s""""neardup_dropped":$nearDupDropped,""" +
+      s""""neardup_dropped":${!r.value.contains(900001L)},""" +
       s""""bindex_kept":$bKept,"bindex_total":$bTotal,""" +
       s""""fp_kept":$fKept,"fp_total":$fTotal,""" +
-      s""""shuf_read_mb":${s2(mtr._1 / mb)},"spill_mb":${s2(mtr._3 / mb)},""" +
-      s""""peak_task_mb":${s2(mtr._4 / mb)}}""")
+      s""""shuf_read_mb":${s2(m.shuffleReadBytes / mb)},""" +
+      s""""spill_mb":${s2(m.spillBytes / mb)},""" +
+      s""""peak_task_mb":${s2(m.peakExecutionMemory / mb)}}""")
   }
 
   /** x47/x64 decontamination-probe evidence (modes "dcprune" /
@@ -471,8 +403,7 @@ object ScaleStress {
     * decision runs distributed (readKeyedDistributed) — the curve must
     * stay flat there too (the r16 verdict's "ndprune row at gram
     * scale"). */
-  private def measureDcPrune(spark: SparkSession, listener: MetricsListener,
-                             dir: String, tag: String,
+  private def measureDcPrune(spark: SparkSession, dir: String, tag: String,
                              aboveCap: Boolean): Unit = {
     import graft.sources.TxnLake
     import graft.streaming.CurationStream
@@ -533,38 +464,24 @@ object ScaleStress {
         org.apache.spark.sql.Row(900001L, probeText)), schema))
     if (aboveCap) spark.conf.set("graft.probe.maxDriverKeys", "1")
     try {
-      var excised = false
-      def once(): (Double, Long, (Long, Long, Long, Long)) = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        val out = CurationStream.curateBatchDecontam(probe, table, 8L, appId)
-          .select("doc_id", "n_removed").collect()
-        val sec = (System.nanoTime() - t0) / 1e9
-        excised = out.exists(r =>
-          r.getLong(0) == 900001L && r.getInt(1) >= aToks.size)
-        SessionHygiene.dropAllStorage(spark)
-        org.apache.spark.GraftListenerShim
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-        (sec, out.length.toLong, (listener.shuffleRead.get,
-          listener.shuffleWrite.get, listener.spill.get,
-          listener.peakMem.get))
-      }
-      once() // warm
-      val a = once(); val b = once()
-      val (sec, rows, mtr) = if (a._1 <= b._1) a else b
+      val r = Measure.steady(spark)(
+        CurationStream.curateBatchDecontam(probe, table, 8L, appId)
+          .select("doc_id", "n_removed").collect())
+      val m = r.totals
+      val excised = r.value.exists(row =>
+        row.getLong(0) == 900001L && row.getInt(1) >= aToks.size)
       val (wKept, wTotal) = CurationStream.lastWindexSkipping
       val path = CurationStream.probePaths.getOrElse((table, 8L), "?")
       val sf = CurationStream.lastDecontamProbeShuffleFree
-      def s2(v: Double) =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      val mb = 1024.0 * 1024.0
       val mode = if (aboveCap) "dcpruneac" else "dcprune"
       println(s"""SCALE {$tag,"mode":"$mode","cpus":${spark.sparkContext
-        .defaultParallelism},"probe_sec":${s2(sec)},"rows":$rows,""" +
+        .defaultParallelism},"probe_sec":${s2(r.seconds)},""" +
+        s""""rows":${r.value.length},""" +
         s""""path":"$path","probe_shuffle_free":$sf,"excised":$excised,""" +
         s""""windex_kept":$wKept,"windex_total":$wTotal,""" +
-        s""""shuf_read_mb":${s2(mtr._1 / mb)},"spill_mb":${s2(mtr._3 / mb)},""" +
-        s""""peak_task_mb":${s2(mtr._4 / mb)}}""")
+        s""""shuf_read_mb":${s2(m.shuffleReadBytes / mb)},""" +
+        s""""spill_mb":${s2(m.spillBytes / mb)},""" +
+        s""""peak_task_mb":${s2(m.peakExecutionMemory / mb)}}""")
     } finally if (aboveCap) spark.conf.unset("graft.probe.maxDriverKeys")
   }
 
@@ -581,8 +498,8 @@ object ScaleStress {
     * file COUNT — how a real lake lays out 100 TB), and the measured
     * apply is the SECOND day's batch: day 1 warms codegen/JIT exactly
     * as a long-lived deployment would. */
-  private def measureCdcApply(spark: SparkSession, listener: MetricsListener,
-                              dir: String, tag: String): Unit = {
+  private def measureCdcApply(spark: SparkSession, dir: String,
+                              tag: String): Unit = {
     import graft.sources.TxnLake
     import TxnLake.{MergeDelete, MergeInsert, MergeUpdate, sourceCol}
     import org.apache.spark.sql.expressions.Window
@@ -616,9 +533,7 @@ object ScaleStress {
           (col("id") * 13L).as("vc"), lit("U").as("op"))
       upd.unionByName(del).unionByName(ins)
     }
-    def applyBatch(b: DataFrame): Double = {
-      listener.reset()
-      val t0 = System.nanoTime()
+    def applyBatch(b: DataFrame) = Measure.sample(spark) {
       TxnLake.mergeIntoClauses(spark, b, table, "event_id",
         matched = Seq(MergeDelete(Some(sourceCol("op") === "D")),
           MergeUpdate(Map("vc" -> sourceCol("vc")))),
@@ -626,33 +541,25 @@ object ScaleStress {
           Map("event_id" -> col("event_id"), "vc" -> col("vc")),
           Some(col("op") =!= "D"))))
         .getOrElse(sys.error("a CDC batch cannot be a no-op"))
-      val sec = (System.nanoTime() - t0) / 1e9
-      SessionHygiene.dropAllStorage(spark)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      sec
     }
     applyBatch(batch(1)) // day 1: the deployment's warm-up
     val preV = TxnLake.latestVersion(spark, table).get
     val preFiles = TxnLake.snapshotFiles(spark, table).map(_.path).toSet
-    val sec = applyBatch(batch(2)) // day 2: steady state, measured
-    val (shufR, spill, peak) =
-      (listener.shuffleRead.get, listener.spill.get, listener.peakMem.get)
+    val r = applyBatch(batch(2)) // day 2: steady state, measured
+    val m = r.totals
     val vPost = TxnLake.latestVersion(spark, table).get
     val postPaths = TxnLake.snapshotFiles(spark, table).map(_.path).toSet
     val rewritten = (preFiles -- postPaths).size
     val carried = (preFiles intersect postPaths).size
     val feedRows = TxnLake.tableChanges(spark, table, preV, vPost,
       "event_id").count()
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val mb = 1024.0 * 1024.0
     println(s"""SCALE {$tag,"mode":"cdcapply","cpus":${spark.sparkContext
-      .defaultParallelism},"apply_sec":${s2(sec)},""" +
+      .defaultParallelism},"apply_sec":${s2(r.seconds)},""" +
       s""""files_rewritten":$rewritten,"files_carried":$carried,""" +
       s""""files_total":${postPaths.size},"feed_rows":$feedRows,""" +
-      s""""shuf_read_mb":${s2(shufR / mb)},"spill_mb":${s2(spill / mb)},""" +
-      s""""peak_task_mb":${s2(peak / mb)}}""")
+      s""""shuf_read_mb":${s2(m.shuffleReadBytes / mb)},""" +
+      s""""spill_mb":${s2(m.spillBytes / mb)},""" +
+      s""""peak_task_mb":${s2(m.peakExecutionMemory / mb)}}""")
   }
 
   /** x54/x55 merge-on-read DML evidence (modes "dvdelete"/"dvupdate"):
@@ -667,8 +574,7 @@ object ScaleStress {
     * wall/bytes curves are the judge's axis: CoW cost tracks FILE
     * size, DV cost tracks MATCH count. Row-count (and, for UPDATE,
     * sum-shift) equality gates the twin plans against each other. */
-  private def measureDvTwin(spark: SparkSession, listener: MetricsListener,
-                            dir: String, tag: String,
+  private def measureDvTwin(spark: SparkSession, dir: String, tag: String,
                             update: Boolean): Unit = {
     import graft.sources.TxnLake
     val mode = if (update) "dvupdate" else "dvdelete"
@@ -688,24 +594,20 @@ object ScaleStress {
     }
     def run(t: String, dv: Boolean): (Double, Long, Long, Long, Long) = {
       val preSizes = TxnLake.snapshotFileSizes(spark, t).toMap
-      listener.reset()
-      val t0 = System.nanoTime()
-      val op =
-        if (update && dv) TxnLake.updateWhereDv(spark, t, pred, set)
-        else if (update) TxnLake.updateWhere(spark, t, pred, set)
-        else if (dv) TxnLake.deleteWhereDv(spark, t, pred)
-        else TxnLake.deleteWhere(spark, t, pred)
-      op.getOrElse(sys.error("fixture: the residue cannot be empty"))
-      val sec = (System.nanoTime() - t0) / 1e9
-      SessionHygiene.dropAllStorage(spark)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      val peak = listener.peakMem.get
+      val r = Measure.sample(spark) {
+        val op =
+          if (update && dv) TxnLake.updateWhereDv(spark, t, pred, set)
+          else if (update) TxnLake.updateWhere(spark, t, pred, set)
+          else if (dv) TxnLake.deleteWhereDv(spark, t, pred)
+          else TxnLake.deleteWhere(spark, t, pred)
+        op.getOrElse(sys.error("fixture: the residue cannot be empty"))
+      }
       val post = TxnLake.snapshotFiles(spark, t).map(_.path).toSet
       val rewrittenBytes = preSizes.filterNot(kv => post(kv._1)).values.sum
       val sum = TxnLake.read(spark, t).agg(org.apache.spark.sql.functions
         .sum(col("vc"))).head().getLong(0)
-      (sec, rewrittenBytes, TxnLake.read(spark, t).count(), peak, sum)
+      (r.seconds, rewrittenBytes, TxnLake.read(spark, t).count(),
+        r.totals.peakExecutionMemory, sum)
     }
     val cow = build("cow"); val dvT = build("dv")
     run(build("warm"), dv = false) // JIT/codegen warm-up on a throwaway
@@ -713,9 +615,6 @@ object ScaleStress {
     val (dvSec, dvBytes, dvRows, dvPeak, dvSum) = run(dvT, dv = true)
     require(cowRows == dvRows && cowSum == dvSum,
       s"plans disagree: $cowRows/$cowSum vs $dvRows/$dvSum")
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val mb = 1024.0 * 1024.0
     println(s"""SCALE {$tag,"mode":"$mode","cpus":${spark.sparkContext
       .defaultParallelism},"rows_matched":$nHit,""" +
       s""""cow_sec":${s2(cowSec)},"cow_rewritten_mb":${s2(cowBytes / mb)},""" +
@@ -738,8 +637,8 @@ object ScaleStress {
     * untimed). File count scales with the factor, keys stay fixed — the
     * delta-sized term a backfill actually has — so the sparse curve's
     * slope IS the keys-x-blooms cost the early-exit claim rests on. */
-  private def measureAcProbe(spark: SparkSession, listener: MetricsListener,
-                             dir: String, tag: String): Unit = {
+  private def measureAcProbe(spark: SparkSession, dir: String,
+                             tag: String): Unit = {
     import graft.sources.TxnLake
     val table = s"$dir/acprobe_t"
     val fdir = new java.io.File(table)
@@ -769,21 +668,10 @@ object ScaleStress {
       .where(pmod(xxhash64(col("k")), lit(stride)) === 0)
     val sparse = spark.range(keyN.toLong)
       .select(concat(lit("zz_absent_"), col("id")).as("k"))
-    def once(keys: DataFrame): (Double, Int) = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val (_, (kept, _)) =
-        TxnLake.readKeyedDistributed(spark, table, "k", keys)
-      val sec = (System.nanoTime() - t0) / 1e9
-      SessionHygiene.dropAllStorage(spark)
-      org.apache.spark.GraftListenerShim
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      (sec, kept)
-    }
-    once(dense); once(sparse) // JIT/codegen warm
     def best(keys: DataFrame): (Double, Int) = {
-      val a = once(keys); val b = once(keys)
-      if (a._1 <= b._1) a else b
+      val r = Measure.steady(spark)(
+        TxnLake.readKeyedDistributed(spark, table, "k", keys)._2._1)
+      (r.seconds, r.value)
     }
     val (dSec, dKept) = best(dense)
     val (sSec, sKept) = best(sparse)
@@ -817,13 +705,10 @@ object ScaleStress {
     // stride over the same (unchanged) data selects the same keys
     val denseOpt = TxnLake.read(spark, table).select(col("k"))
       .where(pmod(xxhash64(col("k")), lit(stride)) === 0)
-    once(denseOpt); once(sparse) // re-warm on the new layout
     val (dOptSec, dOptKept) = best(denseOpt)
     val (sOptSec, _) = best(sparse)
     require(dOptKept == totalOpt,
       s"dense blanket must hit every compacted file: $dOptKept of $totalOpt")
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     println(s"""SCALE {$tag,"mode":"acprobe","cpus":${spark.sparkContext
       .defaultParallelism},"files":$total,"keys":$keyN,""" +
       s""""dense_sec":${s2(dSec)},"dense_kept":$dKept,""" +
@@ -844,10 +729,8 @@ object ScaleStress {
     * claim is structural (the distributed path collects survivors
     * only); the sweep shows the decision cost's growth curve per
     * regime as files go 16 → 1600. */
-  private def measureCkptPrune(spark: SparkSession,
-                               listener: MetricsListener,
-                               dir: String, filesFactor: Int,
-                               tag: String): Unit = {
+  private def measureCkptPrune(spark: SparkSession, dir: String,
+                               filesFactor: Int, tag: String): Unit = {
     import graft.sources.TxnLake
     val table = s"$dir/ckptprune_f${filesFactor}_t"
     val fdir = new java.io.File(table)
@@ -874,24 +757,19 @@ object ScaleStress {
     val mid = bounds(6).toLong
     val pred = col("doc_id")
       .between(mid, mid + ((bounds(7).toLong - mid) / 4))
-    def once(distributed: Boolean): (Double, Int) = {
+    def best(distributed: Boolean): (Double, Int) = {
       if (distributed)
         spark.conf.set("graft.snapshot.distributedPruneCap", "1")
       else spark.conf.unset("graft.snapshot.distributedPruneCap")
       try {
-        val t0 = System.nanoTime()
-        val (_, (kept, _)) = TxnLake.readWherePruned(spark, table, pred)
-        val sec = (System.nanoTime() - t0) / 1e9
-        require(TxnLake.lastPruneDistributed == distributed,
-          s"seam: expected distributed=$distributed")
-        SessionHygiene.dropAllStorage(spark)
-        (sec, kept)
+        val r = Measure.steady(spark) {
+          val (_, (kept, _)) = TxnLake.readWherePruned(spark, table, pred)
+          require(TxnLake.lastPruneDistributed == distributed,
+            s"seam: expected distributed=$distributed")
+          kept
+        }
+        (r.seconds, r.value)
       } finally spark.conf.unset("graft.snapshot.distributedPruneCap")
-    }
-    once(false); once(true) // warm
-    def best(distributed: Boolean): (Double, Int) = {
-      val a = once(distributed); val b = once(distributed)
-      if (a._1 <= b._1) a else b
     }
     val (drvSec, drvKept) = best(distributed = false)
     val (dstSec, dstKept) = best(distributed = true)
@@ -899,8 +777,6 @@ object ScaleStress {
       s"the regimes must prune identically: $drvKept vs $dstKept")
     require(drvKept > 0 && drvKept < total,
       s"fixture: the predicate must truly prune: ($drvKept, $total)")
-    def s2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     println(s"""SCALE {$tag,"mode":"ckptprune","cpus":${spark.sparkContext
       .defaultParallelism},"files":$total,"kept":$drvKept,""" +
       s""""driver_sec":${s2(drvSec)},"dist_sec":${s2(dstSec)}}""")
@@ -910,8 +786,6 @@ object ScaleStress {
     val baseDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spec = if (args.length > 1) args(1) else "1,3,10"
     val spark = GraftSession.local()
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
     val tmp = System.getProperty("java.io.tmpdir")
     try {
       if (spec == "skew") {
@@ -920,21 +794,21 @@ object ScaleStress {
         val queries =
           if (args.length > 2) args(2).split(",").map(_.trim).toSeq
           else SkewQueries
-        measure(spark, listener, dir, queries, "\"mode\":\"skew\"")
+        measure(spark, dir, queries, "\"mode\":\"skew\"")
       } else if (spec == "bigdoc") {
         val dir = s"$tmp/graft_scale_bigdoc"
         buildBigDoc(spark, baseDir, dir)
         val queries =
           if (args.length > 2) args(2).split(",").map(_.trim).toSeq
           else BigDocQueries
-        measure(spark, listener, dir, queries, "\"mode\":\"bigdoc\"")
+        measure(spark, dir, queries, "\"mode\":\"bigdoc\"")
       } else if (spec == "vecprune") {
         val factors = (if (args.length > 2) args(2) else "1,10")
           .split(",").map(_.trim.toInt).toSeq
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureVecPrune(spark, listener, dir, s""""factor":$fct""")
+          measureVecPrune(spark, dir, s""""factor":$fct""")
         }
       } else if (spec == "ndprune") {
         val factors = (if (args.length > 2) args(2) else "1,10")
@@ -942,7 +816,7 @@ object ScaleStress {
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureNdPrune(spark, listener, dir, s""""factor":$fct""")
+          measureNdPrune(spark, dir, s""""factor":$fct""")
         }
       } else if (spec == "ndpruneac") {
         // the ABOVE-CAP regime of the same probe: the driver-key bound
@@ -956,7 +830,7 @@ object ScaleStress {
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
           spark.conf.set("graft.probe.maxDriverKeys", "1")
-          try measureNdPrune(spark, listener, dir,
+          try measureNdPrune(spark, dir,
             s""""factor":$fct,"abovecap":true""")
           finally spark.conf.unset("graft.probe.maxDriverKeys")
         }
@@ -968,7 +842,7 @@ object ScaleStress {
         val dir = s"$tmp/graft_scale_f1"
         buildScaled(spark, baseDir, 1, dir)
         factors.foreach { fct =>
-          measureCkptPrune(spark, listener, dir, fct,
+          measureCkptPrune(spark, dir, fct,
             s""""factor":$fct""")
         }
       } else if (spec == "acprobe") {
@@ -977,7 +851,7 @@ object ScaleStress {
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureAcProbe(spark, listener, dir, s""""factor":$fct""")
+          measureAcProbe(spark, dir, s""""factor":$fct""")
         }
       } else if (spec == "dcprune" || spec == "dcpruneac") {
         val factors = (if (args.length > 2) args(2) else "1,10")
@@ -985,7 +859,7 @@ object ScaleStress {
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureDcPrune(spark, listener, dir, s""""factor":$fct""",
+          measureDcPrune(spark, dir, s""""factor":$fct""",
             aboveCap = spec == "dcpruneac")
         }
       } else if (spec == "cdcapply") {
@@ -994,7 +868,7 @@ object ScaleStress {
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureCdcApply(spark, listener, dir, s""""factor":$fct""")
+          measureCdcApply(spark, dir, s""""factor":$fct""")
         }
       } else if (spec == "dvdelete" || spec == "dvupdate") {
         val factors = (if (args.length > 2) args(2) else "1,10")
@@ -1002,7 +876,7 @@ object ScaleStress {
         factors.foreach { fct =>
           val dir = s"$tmp/graft_scale_f$fct"
           buildScaled(spark, baseDir, fct, dir)
-          measureDvTwin(spark, listener, dir, s""""factor":$fct""",
+          measureDvTwin(spark, dir, s""""factor":$fct""",
             update = spec == "dvupdate")
         }
       } else {
@@ -1013,7 +887,7 @@ object ScaleStress {
         factors.foreach { f =>
           val dir = s"$tmp/graft_scale_f$f"
           buildScaled(spark, baseDir, f, dir)
-          measure(spark, listener, dir, queries, s""""factor":$f""")
+          measure(spark, dir, queries, s""""factor":$f""")
         }
       }
     } finally spark.stop()

@@ -115,12 +115,9 @@ object SuffixArray {
           // get() is 0-based and null-safe past the array end (never
           // throws under ANSI, unlike element_at)
           get(col("toks"), col("pos") + lit(k) - 1).as(s"__k$k")): _*)
-    val t0 = System.nanoTime()
     val base = pinned(PrefixSum
       .competitionRankByRange(tp8, keyCols, "rank", tiedOut = "__tied")
       .select("doc_id", "pos", "rank", "__tied"))
-    if (sys.env.contains("GRAFT_SA_DEBUG"))
-      println(f"[sa] base ${(System.nanoTime() - t0) / 1e9}%.2f s n=${base.count()}")
     // Refine-only-ties: a resolved (unique-rank) suffix stays resolved
     // forever, and new ties only appear INSIDE previously tied groups —
     // so each superstep touches only the still-tied `active` set, which
@@ -189,8 +186,6 @@ object SuffixArray {
       step *= 2
       snapshots ::= step -> fullRanks
       if (active.isEmpty) done = true
-      else if (sys.env.contains("GRAFT_SA_DEBUG"))
-        println(f"[sa] step=$step ${(System.nanoTime() - t0) / 1e9}%.2f s active=${active.count()}")
     }
     (fullRanks, snapshots.reverse, maxLen.toLong)
   }
@@ -292,9 +287,6 @@ object SuffixArray {
       // forced pins in the CONSTRUCTION loop is bounded here: the nest
       // is log2(maxLen/8) levels deep per query, not iterative across
       // queries, and the initial pairs pin carries a MEASURED size.
-      // Env-overridable (GRAFT_SA_PIN_LEVELS=1) for A/B measurement.
-      if (sys.env.get("GRAFT_SA_PIN_LEVELS").contains("1"))
-        pairs = pinned(pairs)
     }
     // remainder < BaseLen: one bounded 8-token slice compare (same
     // zip_with convention as the slice variant, cost capped at 8 cells)
@@ -325,12 +317,11 @@ object SuffixArray {
     * document: the slice compare's per-document cost is quadratic in
     * length, acceptable only under [[LcpLiftThreshold]]. `maxLen` is the
     * corpus maximum document token count (the caller usually has it).
-    * `GRAFT_SA_FORCE_LIFT` forces the lifted path (measurement escape
-    * hatch for the SCALE harness). */
+    * SCALE.md records the factor-100 contrast that chose this rule. */
   def adjacentLcpAuto(docs: DataFrame, sa: DataFrame,
                       snapshots: Seq[(Long, DataFrame)],
                       maxLen: Long): DataFrame =
-    if (maxLen > LcpLiftThreshold || sys.env.contains("GRAFT_SA_FORCE_LIFT"))
+    if (maxLen > LcpLiftThreshold)
       adjacentLcpLifted(docs, sa, snapshots)
     else adjacentLcp(docs, sa)
 

@@ -716,9 +716,7 @@ object TxnLake extends LakeFormat {
     requireLive(spark, table, v, kept)
     lastPruneDistributed = true
     val df =
-      if (kept.isEmpty)
-        toDisplay(ParquetRead(spark, Seq(sampleAbs), schema), ren)
-          .where(lit(false))
+      if (kept.isEmpty) emptyScan(spark, sampleAbs, schema, ren)
       else scanFiles(spark, table, kept, schema,
           resolveDvs(spark, table, v), ren)
         .where(predicate)
@@ -1241,21 +1239,20 @@ object TxnLake extends LakeFormat {
         val files = resolveFiles(spark, table, v)
         requireLive(spark, table, v, files)
         if (files.isEmpty) return (spark.emptyDataFrame, (0, 0))
-        def abs(fms: Seq[FileMeta]) =
-          fms.map(fm => new Path(table, fm.path).toString)
         val entry = readEntry(spark, table, v)
         val schema = entry.schemaStruct
         val ren = entry.renames
         // the sidecars and stats are keyed by the column's PHYSICAL name
         val colPhys = physicalOf(spark, ren, column)
-        def scan(paths: Seq[String]) = toDisplay(ParquetRead(spark, paths, schema), ren)
         val kept =
           if (keys.isEmpty) Seq.empty
           else files.filter(
             fileMayContainKeys(spark, table, _, colPhys, keys))
         lastKeyedProbeDistributed = false
         val df =
-          if (kept.isEmpty) scan(Seq(abs(files).head)).where(lit(false))
+          if (kept.isEmpty)
+            emptyScan(spark, new Path(table, files.head.path).toString,
+              schema, ren)
           else scanFiles(spark, table, kept, schema,
             resolveDvs(spark, table, v), ren)
         (df, (kept.size, files.size))
@@ -1398,10 +1395,10 @@ object TxnLake extends LakeFormat {
         val kept = files.filter(fm => keepAll(fm.path))
         lastKeyedProbeDistributed = true
         val df =
-          if (kept.isEmpty) {
-            val head = Seq(new Path(table, files.head.path).toString)
-            toDisplay(ParquetRead(spark, head, schema), ren).where(lit(false))
-          } else scanFiles(spark, table, kept, schema,
+          if (kept.isEmpty)
+            emptyScan(spark, new Path(table, files.head.path).toString,
+              schema, ren)
+          else scanFiles(spark, table, kept, schema,
             resolveDvs(spark, table, v), ren)
         (df, (kept.size, files.size))
     }
@@ -2189,6 +2186,15 @@ object TxnLake extends LakeFormat {
     }
   }
 
+  /** The schema-preserving empty result of a scan that kept no file,
+    * built over ONE data file (`absFile`): a single footer read suffices
+    * for the schema — building the relation over the whole snapshot
+    * would be an O(table) listing for a proven-empty result. */
+  private def emptyScan(spark: SparkSession, absFile: String,
+                        schema: Option[StructType],
+                        ren: Map[String, String]): DataFrame =
+    toDisplay(ParquetRead(spark, Seq(absFile), schema), ren).where(lit(false))
+
   /** Scan `files` under `schema` with the live deletion vectors applied —
     * the MERGE-ON-READ read path: a DV'd file scans with the parquet
     * ROW-INDEX metadata column and drops its masked positions via a
@@ -2201,11 +2207,10 @@ object TxnLake extends LakeFormat {
                         dvs: Map[String, DvRef],
                         ren: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.col
-    def scan(paths: Seq[String]) = ParquetRead(spark, paths, schema)
-    def abs(fms: Seq[FileMeta]) =
-      fms.map(fm => new Path(table, fm.path).toString)
+    def scan(fms: Seq[FileMeta]) =
+      ParquetRead(spark, fms.map(fm => new Path(table, fm.path).toString), schema)
     val (masked, clean) = files.partition(fm => dvs.contains(fm.path))
-    val cleanDf = if (clean.isEmpty) None else Some(scan(abs(clean)))
+    val cleanDf = if (clean.isEmpty) None else Some(scan(clean))
     val maskedDf = if (masked.isEmpty) None else {
       // the mask join keys on the file NAME — two masked files sharing a
       // base name (possible only through pathological log surgery, e.g.
@@ -2217,7 +2222,7 @@ object TxnLake extends LakeFormat {
           s"$table — the deletion-vector join would cross-apply masks")
       val del = dvPairsDf(spark, table,
         masked.map(fm => new Path(fm.path).getName -> dvs(fm.path)))
-      val base = scan(abs(masked))
+      val base = scan(masked)
         .withColumn("__graft_dv_fn", col("_metadata.file_name"))
         .withColumn("__graft_dv_ri", col("_metadata.row_index"))
       Some(base.join(del, Seq("__graft_dv_fn", "__graft_dv_ri"), "left_anti")
@@ -2390,25 +2395,19 @@ object TxnLake extends LakeFormat {
         val files = resolveFiles(spark, table, v)
         requireLive(spark, table, v, files)
         if (files.isEmpty) return (spark.emptyDataFrame, (0, 0))
-        def abs(fms: Seq[FileMeta]) =
-          fms.map(fm => new Path(table, fm.path).toString)
+        val sample = new Path(table, files.head.path).toString
         // logged schema (when present) both evolves old files and lets the
         // predicate reference columns the SAMPLE file may predate
         val entry = readEntry(spark, table, v)
         val schema = entry.schemaStruct
         val ren = entry.renames
-        def scan(paths: Seq[String]) = toDisplay(ParquetRead(spark, paths, schema), ren)
         // the predicate references DISPLAY names; the matcher sees the
         // stats through the same display overlay (displayMeta)
-        val pred = resolvedPredicate(spark, abs(files).head, predicate,
+        val pred = resolvedPredicate(spark, sample, predicate,
           schema.map(toDisplaySchema(_, ren)))
         val kept = files.filter(fm => mayMatch(displayMeta(ren)(fm), pred))
         val df =
-          if (kept.isEmpty)
-            // schema-preserving empty over ONE file: a single footer read
-            // suffices for the schema — building the relation over the whole
-            // snapshot would be an O(table) listing for a proven-empty result
-            scan(Seq(abs(files).head)).where(lit(false))
+          if (kept.isEmpty) emptyScan(spark, sample, schema, ren)
           else scanFiles(spark, table, kept, schema,
               resolveDvs(spark, table, v), ren)
             .where(predicate)

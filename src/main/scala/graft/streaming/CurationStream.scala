@@ -160,6 +160,9 @@ object CurationStream {
     (((capped + advisory - 1) / advisory).toInt).max(1)
   }
 
+  /** Input bytes per CPU slot for [[spreadForCpu]]. */
+  private val CpuAdvisoryBytes = 128L * 1024
+
   /** Spread an under-partitioned (typically width-adapted, KB-scale)
     * frame before a CPU-bound per-row stage (shingling, gram explode,
     * excision) — to a width the input's MEASURED bytes justify, not
@@ -169,16 +172,15 @@ object CurationStream {
     * FileOutputStream.open0 at the top of this tier's executor time), so
     * fanning a KB micro-batch to 32 map slots multiplied every probe/
     * index exchange's file churn 16-32x for ~20 ms of CPU win. Width =
-    * ceil(bytes / SPARK_GRAFT_CPU_ADVISORY_BYTES, default 128 KiB/slot),
-    * clamped to [1, cores]: a KB batch takes a few slots, a production
-    * batch still saturates the machine (and a plan with UNKNOWN size —
-    * no pin, no file scan behind it — keeps the full-cores spread).
-    * Never shrinks an already-wider frame. */
+    * ceil(bytes / [[CpuAdvisoryBytes]]), clamped to [1, cores]: a KB
+    * batch takes a few slots, a production batch still saturates the
+    * machine (and a plan with UNKNOWN size — no pin, no file scan behind
+    * it — keeps the full-cores spread). Never shrinks an already-wider
+    * frame. */
   private[graft] def spreadForCpu(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val adv = BigInt(sys.env.getOrElse(
-      "SPARK_GRAFT_CPU_ADVISORY_BYTES", "131072").toLong.max(1L))
+    val adv = BigInt(CpuAdvisoryBytes)
     val want =
       if (bytes <= 0 || bytes >= BigInt(Long.MaxValue) / 4) cores
       else ((bytes + adv - 1) / adv).min(cores).toInt.max(1)

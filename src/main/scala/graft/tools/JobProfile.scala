@@ -1,74 +1,29 @@
 package graft.tools
 
-import graft.{GraftSession, SessionHygiene, SparkEntry}
-import org.apache.spark.scheduler._
+import graft.{GraftSession, SparkEntry}
+import graft.obs.Measure
 import scala.collection.mutable
 
 /** Dev tool (optimization guide §1): per-JOB time breakdown of a registry
   * query. The lifecycle queries (x32..x70, d47..) run dozens of Spark jobs
   * per invocation — a single wall-clock number can't say which phase to
-  * optimize. This attaches a listener recording every job's wall time,
-  * call-site/description, task time, and shuffle bytes, runs the query
-  * warm-then-measured (the Bench protocol), and prints the measured run's
-  * jobs sorted by duration plus an aggregation by call site.
+  * optimize. Each query runs under [[graft.obs.Measure.steady]] (the
+  * Bench protocol, one fresh JVM, without the rest of the registry
+  * sharing the session); the tool prints the steady-state time as
+  * `TIME <name> <sec>`, then the measured run's jobs — wall time,
+  * label, task time, input and shuffle bytes — aggregated by label and
+  * sorted by duration.
   * Run: sbt "runMain graft.tools.JobProfile <sfDir> <name> [name...]" */
 object JobProfile {
-  private case class JobRec(id: Int, start: Long, var end: Long = 0L,
-                            var desc: String = "", var taskTime: Long = 0L,
-                            var shufRead: Long = 0L, var shufWrite: Long = 0L,
-                            var input: Long = 0L, var tasks: Int = 0)
-  private val stageJob = mutable.Map.empty[Int, Int]
-
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = args.head
     println("FSIMPL " + org.apache.hadoop.fs.FileSystem
       .get(new java.net.URI("file:///"),
         spark.sparkContext.hadoopConfiguration).getClass.getName)
     println("ISTESTING spark.testing=" + sys.props.get("spark.testing") +
-      " SPARK_TESTING=" + sys.env.get("SPARK_TESTING") +
       " assertions=" + getClass.desiredAssertionStatus())
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
-    @volatile var recording = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(d => d.nonEmpty && !d.startsWith("id = "))
-          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
-          .getOrElse("")
-        jobs.synchronized {
-          e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
-          jobs(e.jobId) = JobRec(e.jobId, e.time, desc = site)
-        }
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (recording) jobs.synchronized {
-          stageJob.get(e.stageInfo.stageId).foreach { jid =>
-            jobs.get(jid).foreach { r =>
-              if (r.desc.isEmpty) r.desc = e.stageInfo.name
-            }
-          }
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (recording) {
-        val m = e.taskMetrics
-        if (m != null) jobs.synchronized {
-          // exact attribution: TaskEnd carries the stageId, and JobStart
-          // recorded every stage's owning job
-          stageJob.get(e.stageId).flatMap(jobs.get).foreach { r =>
-            r.taskTime += m.executorRunTime
-            r.shufRead += m.shuffleReadMetrics.totalBytesRead
-            r.shufWrite += m.shuffleWriteMetrics.bytesWritten
-            r.input += m.inputMetrics.bytesRead
-            r.tasks += 1
-          }
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // In-process stack sampler (guide §7.3: external jstack/jcmd attach is
     // blocked in this sandbox) — every ~8 ms, record the first
     // "interesting" frame (plus nearest graft/spark context) of every
@@ -96,8 +51,8 @@ object JobProfile {
               val interesting = fs.find(f => !boring.exists(f.contains))
               val isIdle = boring.exists(fs.head.contains)
               if (!isIdle && interesting.isDefined) {
-                val wantFull = sys.env.getOrElse("GRAFT_SAMPLE_FULL", "forkAndExec")
-                if (fs.exists(_.contains(wantFull)) && forkStacks.size < 3)
+                // full stacks of the first threads caught forking a process
+                if (fs.exists(_.contains("forkAndExec")) && forkStacks.size < 3)
                   forkStacks.synchronized {
                     forkStacks += frames.map(_.toString).mkString("\n    ")
                   }
@@ -123,59 +78,43 @@ object JobProfile {
     if (sampling) sampler.start()
     args.tail.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+      // the sampled stacks are part of each run's value, so the ones
+      // printed belong to the run whose time is reported
+      val r = Measure.steady(spark) {
+        hot.synchronized(hot.clear())
+        sampleOn = true
+        try { fn(spark, sfDir).count(); hot.synchronized(hot.toMap) }
+        finally sampleOn = false
       }
-      once() // warm
-      SessionHygiene.dropAllStorage(spark)
-      jobs.synchronized(jobs.clear())
-      hot.synchronized(hot.clear())
-      // codegen-churn attribution: compilations during the MEASURED run of
-      // an identical repeat execution are per-run-unique generated source
-      // (cache misses), pure overhead a steady-state deployment re-pays
-      // per batch — count and time them via Spark's own codegen metrics
-      import org.apache.spark.metrics.source.CodegenMetrics
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      recording = true
-      sampleOn = true
-      val t = once()
-      sampleOn = false
-      recording = false
-      val c1 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      println(s"  codegen: ${c1 - c0} compilations during measured run " +
+      println(f"TIME $name ${r.seconds}%.2f")
+      println(s"  codegen: ${r.codegenCompiles} compilations during measured run " +
         s"(cache misses on a repeat execution)")
-      // let straggler listener events drain (bus is private API; a short
-      // sleep is enough for a dev tool)
-      Thread.sleep(300)
-      SessionHygiene.dropAllStorage(spark)
-      val recs = jobs.synchronized(jobs.values.toSeq)
-      println(f"PROFILE $name total=$t%.2f s, ${recs.size} jobs, " +
-        f"jobWall=${recs.map(r => (r.end - r.start).max(0L)).sum / 1e3}%.2f s")
-      val byDesc = recs.groupBy(r => r.desc.take(90)).map { case (d, rs) =>
-        (d, rs.map(r => (r.end - r.start).max(0L)).sum, rs.size,
-          rs.map(_.taskTime).sum, rs.map(_.input).sum,
-          rs.map(_.shufRead).sum + rs.map(_.shufWrite).sum)
+      val recs = r.jobs
+      println(f"PROFILE $name total=${r.seconds}%.2f s, ${recs.size} jobs, " +
+        f"jobWall=${recs.map(_.wallMs).sum / 1e3}%.2f s")
+      val byDesc = recs.groupBy(_.label.take(90)).map { case (d, rs) =>
+        (d, rs.map(_.wallMs).sum, rs.size, rs.map(_.totals.taskMs).sum,
+          rs.map(_.totals.inputBytes).sum,
+          rs.map(j => j.totals.shuffleReadBytes + j.totals.shuffleWriteBytes).sum)
       }.toSeq.sortBy(-_._2)
       byDesc.foreach { case (d, wall, n, task, in, shuf) =>
         println(f"  ${wall / 1e3}%6.2fs n=$n%-3d task=${task / 1e3}%6.1fs " +
           f"in=${in / 1e6}%6.1fMB shuf=${shuf / 1e6}%6.1fMB  $d")
       }
       println(s"  -- slowest individual jobs --")
-      recs.sortBy(r => -(r.end - r.start)).take(15).foreach { r =>
-        println(f"  job=${r.id}%-4d ${(r.end - r.start).max(0L) / 1e3}%6.2fs " +
-          f"tasks=${r.tasks}%-4d ${r.desc.take(110)}")
+      recs.sortBy(-_.wallMs).take(15).foreach { j =>
+        println(f"  job=${j.id}%-4d ${j.wallMs / 1e3}%6.2fs " +
+          f"tasks=${j.totals.tasks}%-4d ${j.label.take(110)}")
       }
       if (sampling) {
+        val hotSeq = r.value.toSeq
         println(s"  -- busy samples by thread family (8 ms ticks) --")
-        hot.synchronized(hot.toSeq).groupBy(_._1._1)
+        hotSeq.groupBy(_._1._1)
           .map { case (fam, xs) => fam -> xs.map(_._2).sum }
           .toSeq.sortBy(-_._2).take(12).foreach { case (fam, n) =>
             println(f"  $n%5d $fam")
           }
         println(s"  -- hottest sampled stacks (8 ms ticks, busy threads) --")
-        val hotSeq = hot.synchronized(hot.toSeq)
         hotSeq.sortBy(-_._2).take(30).foreach {
           case ((fam, frame), n) =>
             println(f"  $n%4d [$fam] $frame")

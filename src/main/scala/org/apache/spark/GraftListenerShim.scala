@@ -1,11 +1,12 @@
 package org.apache.spark
 
 /** Deterministic listener-bus drain for metric snapshots (see
-  * [[graft.ScaleStress]]).
+  * [[graft.obs.Measure]]).
   *
-  * The harness attributes task metrics to a timed run by resetting an
-  * accumulator listener before the run and snapshotting after it — which
-  * is only correct once the async [[org.apache.spark.scheduler.LiveListenerBus]]
+  * The measurement protocol attributes task metrics to a timed run by
+  * resetting an accumulator listener before the run and snapshotting
+  * after it — which is only correct once the async
+  * [[org.apache.spark.scheduler.LiveListenerBus]]
   * has dispatched every task-end event the run produced. A fixed
   * `Thread.sleep` drain races on a loaded machine (late events get
   * attributed to the NEXT run's snapshot); `waitUntilEmpty` is the exact

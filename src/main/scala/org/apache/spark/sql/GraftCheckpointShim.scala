@@ -6,70 +6,49 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Statistics hygiene for iterative DataFrame algorithms (see
   * [[graft.operators.SuffixArray]]).
   *
-  * Spark 4's `Dataset.localCheckpoint` rewrites the new LogicalRDD
-  * leaf's statistics to the ORIGINAL plan's estimate
-  * (`LogicalRDD.rewriteStatsAndConstraints`). For an iterative
-  * superstep loop that is quietly catastrophic: size-only join
-  * estimation (`SizeInBytesOnlyStatsPlanVisitor.visitJoin`) MULTIPLIES
-  * child sizes, and a superstep's inputs are previous checkpoints —
-  * so the carried `sizeInBytes` BigInt roughly squares every superstep,
-  * its bit length doubling each time. By superstep ~14 (a 10⁵-token
-  * document in the suffix tier) the driver spends minutes inside
-  * `BigInteger.multiply` merely *evaluating statistics*, observed as a
-  * single-core planner stall with Karatsuba/Toom-Cook frames on the
-  * main thread.
-  *
-  * This shim rebuilds a just-checkpointed Dataset's leaf WITHOUT the
-  * carried statistics. The planner then falls back to
-  * `spark.sql.defaultSizeInBytes` for the leaf — the honest "unknown"
-  * answer — and AQE re-plans joins from true runtime sizes, which is
-  * exactly the treatment a materialized intermediate of unknowable size
-  * should get. Data, partitioning, and ordering are untouched: the same
-  * checkpointed RDD backs the result.
-  *
   * Lives in the `org.apache.spark.sql` package solely for
   * `Dataset.ofRows` access; everything else is public Spark API.
   */
 object GraftCheckpointShim {
 
-  /** `df` must be freshly `localCheckpoint()`ed (its logical plan a
-    * [[LogicalRDD]]); any other plan is returned unchanged. */
-  def dropCarriedStats(df: Dataset[Row]): Dataset[Row] =
-    df.queryExecution.logical match {
-      case lr: LogicalRDD =>
-        val session = df.sparkSession.asInstanceOf[CSparkSession]
-        val clean = new LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-          lr.outputOrdering, lr.isStreaming, lr.stream)(session, None, None)
-        CDataset.ofRows(session, clean)
-      case _ => df
-    }
-
   /** Pin `df` with MEASURED statistics (optimization round 20, guide
     * §3.1: size estimates after filters/UDFs are often badly wrong —
     * here they are replaced by a measurement, not an estimate).
     *
-    * `Dataset.localCheckpoint()` is eager: by the time it returns, every
-    * block of the checkpointed RDD sits in the block manager with a known
-    * byte size. Carrying that measured size as the leaf's `sizeInBytes`
-    * (instead of the carried estimate `dropCarriedStats` rejects, or the
-    * "unknown" default it falls back to) lets every downstream join pick
-    * its strategy at PLAN time: a genuinely small pinned intermediate
+    * Why not keep the checkpoint's own statistics: Spark 4's
+    * `Dataset.localCheckpoint` rewrites the new LogicalRDD leaf's
+    * statistics to the ORIGINAL plan's estimate
+    * (`LogicalRDD.rewriteStatsAndConstraints`). For an iterative
+    * superstep loop that is quietly catastrophic: size-only join
+    * estimation (`SizeInBytesOnlyStatsPlanVisitor.visitJoin`) MULTIPLIES
+    * child sizes, and a superstep's inputs are previous checkpoints —
+    * so the carried `sizeInBytes` BigInt roughly squares every superstep,
+    * its bit length doubling each time. By superstep ~14 (a 10⁵-token
+    * document in the suffix tier) the driver spends minutes inside
+    * `BigInteger.multiply` merely *evaluating statistics*, observed as a
+    * single-core planner stall with Karatsuba/Toom-Cook frames on the
+    * main thread. The pin therefore rebuilds the leaf WITHOUT the carried
+    * statistics; data, partitioning, and ordering are untouched: the same
+    * checkpointed RDD backs the result.
+    *
+    * What it carries instead: `Dataset.localCheckpoint()` is eager, so by
+    * the time it returns every block of the checkpointed RDD sits in the
+    * block manager with a known byte size. Carrying that measured size as
+    * the leaf's `sizeInBytes` (instead of the carried estimate, or the
+    * "unknown" `spark.sql.defaultSizeInBytes`) lets every downstream join
+    * pick its strategy at PLAN time: a genuinely small pinned intermediate
     * broadcasts immediately — no shuffle map stage, no AQE stage job, no
     * MapStatus round-trip — while a large one keeps the exchange exactly
-    * as the honest default would. The iterative-superstep pathology the
-    * plain shim exists for cannot return: the measured size is a plain
-    * long from the block manager, never a product of child estimates.
+    * as the honest default would. The measured size is a plain long from
+    * the block manager, never a product of child estimates, so the
+    * superstep blowup cannot return.
     *
     * Deserialized in-memory block sizes overstate the serialized
     * broadcast payload, so the threshold comparison errs conservative.
     * Falls back to the unknown-stats leaf when the blocks cannot be
     * found (nothing cached — e.g. a lazy checkpoint). */
-  private val measuredPins: Boolean =
-    !sys.env.get("SPARK_GRAFT_MEASURED_PINS").contains("0")
-
   def pinWithMeasuredStats(df: Dataset[Row]): Dataset[Row] = {
     val ck = df.localCheckpoint()
-    if (!measuredPins) return dropCarriedStats(ck)
     ck.queryExecution.logical match {
       case lr: LogicalRDD =>
         val session = ck.sparkSession.asInstanceOf[CSparkSession]

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt lock) — same
 # JVM flags as build.sbt's forked run. Usage:
-#   tools/run_direct.sh graft.tools.TimeQuery /root/testdata/sf0.1 v07_...
+#   tools/run_direct.sh graft.tools.JobProfile <sfDir> <query> [query...]
+# (JobProfile prints the query's steady-state "TIME <name> <sec>" line
+# first, then its per-job breakdown.)
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
